@@ -79,7 +79,9 @@ object Bench {
   /** The ONE-LINE contract artifact (driver tail capture is 2000 chars
     * including sbt's trailer — BenchLineSpec pins the worst-case length).
     * Exactly the fields every BENCH_r*.json has carried since round 4,
-    * plus the round-15 latency-canary pair inside canaryJson.
+    * plus the round-15 latency-canary pair inside canaryJson. `cached` and
+    * `action` are always true / "noop" now; they stay in the line so its
+    * format does not change.
     */
   private[graft] def shortLine(total: Double, head: Seq[(String, Double)],
       headKey: String, headTotal: Double, nQueries: Int, errJson: String,
@@ -90,55 +92,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val cpusN = scala.util.Try(cpus.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // data-adaptive default, env-overridable — see shuffleDefault above
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", shuffleDefault(cpusN, inputBytes(sfDir)).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.EventsNanosConf, "true")
-      // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
-      // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
-      // orders FACT side no longer does — its per-execution driver-side
-      // broadcast build cost ~0.3–0.4 s/query (q3 1.09 → 0.67 s as a
-      // shuffle join). That is also the honest scale plan: at 100 TB a
-      // fact side is never broadcast-able.
-      .config("spark.sql.autoBroadcastJoinThreshold", sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"))
-      // AQE off for the local bench (round-8 matrix A/B): with pre-spread
-      // cached inputs and sub-second stages, AQE's per-stage
-      // materialize-and-replan roundtrips cost 0.05–0.3 s/query and its
-      // runtime re-optimizations (coalesce, skew split, join demotion)
-      // have nothing to improve at this size. A cluster deployment keeps
-      // it on — this is harness latency tuning, recorded in the artifact.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // shuffle/spill codec A/B knob (guide §2.3) — default is Spark's own
-      // default (lz4); zstd measured at sf3 in BENCH_NOTES §52
-      .config("spark.io.compression.codec", sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      // local-harness opt-in: test tables are single-row-group files, so
-      // heavy-compute queries repartition them across cores (queries.Det)
-      .config(graft.queries.Det.SpreadConf, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .getOrCreate()
-    // ERROR, not WARN: each WindowExec "No Partition Defined" WARN is ~190
-    // chars and the round-4 run emitted 8 of them — ~1.5 KB of the driver's
-    // 2000-char tail capture, crowding the one line that matters.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warm-cache the input tables (default on; SPARK_GRAFT_CACHE=false for
-    // the cold-scan variant). BASELINE.md's DuckDB numbers are WARM runs —
-    // data resident in the buffer pool / OS page cache — so the comparable
-    // Spark posture is the cached-table one (spark.catalog.cacheTable is
-    // the idiomatic form). Mechanism: persisting each Tables.table plan
-    // once makes Spark's CacheManager substitute the InMemoryRelation into
-    // EVERY query by canonical-subtree match — no query code changes, and
-    // the ~0.2 s single-row-group parquet-open constant per scan
-    // (docs/BENCH_NOTES.md component floors) drops out, exactly as it has
-    // already dropped out of the DuckDB side. bench_out.json records the
-    // mode in the `cached` field.
-    val cacheTables = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
-    if (cacheTables) Tables.names.foreach { n =>
+    // SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE override the posture for sweeps
+    val spark = Harness.session(
+      Harness.benchConf(Harness.cpus, inputBytes(sfDir)) ++
+        sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _) ++
+        sys.env.get("SPARK_GRAFT_AQE").map("spark.sql.adaptive.enabled" -> _),
+      // ERROR, not WARN: each WindowExec "No Partition Defined" WARN is ~190
+      // chars and the round-4 run emitted 8 of them — ~1.5 KB of the
+      // driver's 2000-char tail capture, crowding the one line that matters.
+      logLevel = "ERROR")
+    // Warm-cache the input tables. BASELINE.md's DuckDB numbers are WARM
+    // runs — data resident in the buffer pool / OS page cache — so the
+    // comparable Spark posture is the cached-table one (spark.catalog.
+    // cacheTable is the idiomatic form). Mechanism: persisting each
+    // Tables.table plan once makes Spark's CacheManager substitute the
+    // InMemoryRelation into EVERY query by canonical-subtree match — no
+    // query code changes, and the ~0.2 s single-row-group parquet-open
+    // constant per scan (docs/BENCH_NOTES.md component floors) drops out,
+    // exactly as it has already dropped out of the DuckDB side.
+    Tables.names.foreach { n =>
       val df = Tables.table(spark, sfDir, n)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       df.count() // materialize now, not inside the first timed query
@@ -161,14 +134,8 @@ object Bench {
     // its results (fetch over the full query, sort included), so the
     // comparable — and honest — Spark action is full materialization into
     // the no-op DSv2 sink: every column computed, the contract sort
-    // executed, nothing persisted. SPARK_GRAFT_ACTION=count keeps the old
-    // action for A/Bs (measured deltas in docs/BENCH_NOTES.md).
-    // Whitelisted + normalized via BenchAction (ADVICE r7): an unknown
-    // value fails fast instead of silently running noop while recording
-    // the raw (unescaped) env string in the artifact.
-    val benchAction = BenchAction.resolve()
-    def runAction(df: org.apache.spark.sql.DataFrame): Unit =
-      BenchAction.run(benchAction, df)
+    // executed, nothing persisted (measured deltas in docs/BENCH_NOTES.md).
+    def runAction(df: org.apache.spark.sql.DataFrame): Unit = BenchAction.run("noop", df)
     // Untimed warmup at sfDir: compiles the generated code (Janino) and JITs
     // the hot paths the timed passes will take, including AQE's re-planned
     // stages at this scale.
@@ -398,10 +365,10 @@ object Bench {
       s""""aqe":$aqe,"shuffle":$sh,"broadcast":"$bc""""
     }
     val line = shortLine(total, head, headKey, headTotal, timed.size, errJson,
-      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cacheTables,
-      benchAction.toString, confJson)
+      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cached = true,
+      action = "noop", confJson)
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cacheTables,"action":"$benchAction",$confJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(fullLine) finally w.close()

@@ -2,34 +2,18 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared SPARK_GRAFT_ACTION resolution for the bench/profile harnesses
-  * (ADVICE r7): one whitelist, one behavior, an explicit error on unknown
-  * values. Before this, Bench mapped any unknown value to the noop write
-  * while Profile mapped it to toRdd.count() — a typo silently A/B'd
-  * different actions between harnesses — and Bench interpolated the raw
-  * env value verbatim into the artifact JSON's "action" field.
+/** The timed action of a benchmark query. Actions:
+  *  - noop: full materialization through Spark's no-op DSv2 sink — every
+  *    column computed, the contract ORDER BY executed, nothing persisted.
+  *    The honest posture vs DuckDB's result fetch; `graft.Bench` times it.
+  *  - rdd:  toRdd.count() — measured ≈ noop; `perfbench` times it.
   *
-  * Actions:
-  *  - noop  (default): full materialization through Spark's no-op DSv2
-  *    sink — every column computed, the contract ORDER BY executed,
-  *    nothing persisted. The honest posture vs DuckDB's result fetch.
-  *  - count: the legacy pruned action (the optimizer elides work a row
-  *    count doesn't need) — kept only for A/Bs against old artifacts.
-  *  - rdd:   toRdd.count() — measured ≈ noop; kept for cross-checks.
+  * A `count()` action is deliberately absent: the optimizer prunes work a
+  * row count doesn't need (BENCH_NOTES "Round-7 session 3: the timed
+  * action was wrong — count() pruned real work").
   */
 object BenchAction {
-  val Known: Seq[String] = Seq("noop", "count", "rdd")
-
-  /** The validated, normalized action name — safe to embed in artifacts. */
-  def resolve(): String = {
-    val a = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
-    require(Known.contains(a),
-      s"SPARK_GRAFT_ACTION must be one of ${Known.mkString("|")}, got '$a'")
-    a
-  }
-
   def run(action: String, df: DataFrame): Unit = action match {
-    case "count" => df.count(): Unit
     case "rdd" => df.queryExecution.toRdd.count(): Unit
     case "noop" => df.write.mode("overwrite").format("noop").save()
     case other => throw new IllegalArgumentException(s"unknown bench action '$other'")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * `events.parquet` stores `ts` as parquet INT64 TIMESTAMP(NANOS,false),
   * which Spark 4.x refuses to read by default ([PARQUET_TYPE_ILLEGAL]).
   * With `spark.sql.legacy.parquet.nanosAsLong=true` (a SESSION conf — set
-  * it in the SparkSession builder; `graft.Tables.EventsNanosConf` names it,
-  * and every harness main in this repo sets it. There is no per-read
+  * it when the session is built; `graft.Tables.EventsNanosConf` names it,
+  * and both `graft.Harness` postures set it. There is no per-read
   * parquet option for it, so the loader cannot stay side-effect-free AND
   * set it itself) the column reads as bigint nanoseconds; we convert
   * ns → µs with *integer* division (a

@@ -354,7 +354,7 @@ object Refinery {
     // mergePairFold projections: CollapseProject re-inlines chained
     // fold steps into a ~4^k-node expression (measured: plan text 7 KB
     // at k=1 → 1.0 MB at k=6 with 43 s execution; k=12 never returned —
-    // tools/BpeApplyProbe, BENCH_NOTES §22). RefinerySpec pins the
+    // BENCH_NOTES §22). RefinerySpec pins the
     // expression element-for-element to the fold form at collapsible k.
     wf.select(col("wn"),
       explode(graft.functions.BpeApply.bpe_apply(col("w"), BpeMerges)).as("symbol"))

@@ -653,7 +653,7 @@ object TextOps {
     * two at diameter 11 and two at 12, max cluster 583 docs) — diameter
     * GROWS with corpus size, so a fixed unroll ([[CcRounds]]) or a
     * diameter-bound loop is the wrong 100 TB posture. Measured round
-    * counts over the sf1 pair graph (tools/CcRoundsProbe, identical
+    * counts over the sf1 pair graph (BENCH_NOTES §21, identical
     * labels): stars 5 vs label loop 11, equal wall time at this scale
     * (4.9 s both — a stars round does ~2 aggregates + 2 joins vs the
     * label round's 1 + 1), with the gap opening as diameter grows.
@@ -749,52 +749,6 @@ object TextOps {
       Tables.documents(spark, sf).select(col("doc_id")),
       minhashCandidatePairs(spark, sf).select(col("doc_a"), col("doc_b")))._1
       .orderBy(col("doc_id"))
-
-  // ------------------------------------- north star: LSH, zero-shuffle form
-  /** MinHash-LSH with the signature computed as a PER-ROW fold instead of
-    * explode + groupBy: zero extra rows, O(1) state per doc, no Generate.
-    *
-    * Measured verdict (sf0.1, warm, local[32]): ~3× SLOWER than
-    * [[dedupMinhashLsh]] (3.6 s vs 1.3 s) — the nested-lambda HOF is
-    * interpreted (an 8-element array allocated per shingle step), while the
-    * explode form runs codegen'd AND its groupBy already reduces each doc
-    * to one row map-side (partial agg), so its shuffle is doc-keyed, not
-    * shingle-keyed. The explode form is therefore the production plan at
-    * every scale; this variant is kept as the measured counter-example
-    * (TextOpsAltSpec pins output equality) — the same fold pattern that
-    * WINS for doc_fingerprint (where the fold replaces a 1-row-per-
-    * character Generate and there is no aggregation to amortize it).
-    *
-    * Fold seed '~' (ASCII 0x7E > 'f') sorts above every md5 hex digest, so
-    * `least` needs no null handling.
-    */
-  def dedupMinhashPerRow(spark: SparkSession, sf: String): DataFrame = {
-    val fp = expr(
-      "aggregate(" +
-        "transform(sequence(1, size(t) - 2), i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)))," +
-        " array_repeat('~', 8)," +
-        " (acc, sh) -> transform(sequence(0, 7), j -> least(element_at(acc, j + 1), md5(CAST(concat(sh, '#', j) AS BINARY)))))")
-    val minhash = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
-      .select(col("doc_id"), tokensCol.as("t"))
-      .where(size(col("t")) >= 3)
-      .select(col("doc_id"), fp.as("fp"))
-    val bandArr = array((0 until 4).map(bnd =>
-      struct(
-        lit(bnd).as("band"),
-        md5(concat(element_at(col("fp"), 2 * bnd + 1), element_at(col("fp"), 2 * bnd + 2)).cast("binary"))
-          .as("h"))): _*)
-    val bands = minhash
-      .select(col("doc_id"), explode(bandArr).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.h").as("band_hash"))
-    val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-    a.join(b, Seq("band", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   // --------------------------------------------------- north star: SimHash
   /** 16-bit SimHash per document: one bit per leading hex digit of each

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     to the map (VERDICT r14 item 2);
   *  2. the scale-adaptive shuffle-partition default (VERDICT r14 item 1)
   *     resolves to the measured-best 8 at sf0.1 sizes and to the core
-  *     count at sf1+ sizes.
+  *     count at sf1+ sizes;
+  *  3. the two session postures in [[Harness]], conf by conf — the bench
+  *     map must equal what perfbench sets for its own session.
   */
 class BenchLineSpec extends AnyFunSuite {
 
@@ -61,5 +63,27 @@ class BenchLineSpec extends AnyFunSuite {
     assert(Bench.shuffleDefault(8, 495 * mb) == 8)
     // degenerate inputs never go below 8
     assert(Bench.shuffleDefault(4, 0L) == 8)
+  }
+
+  private val deployment = Map(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  test("deployment posture: local[cpus], shuffle = cpus, UTC, no UI, events readable, AQE left to Spark") {
+    assert(Harness.deploymentConf(4) == deployment)
+  }
+
+  test("bench posture: the conf perfbench sets (minus its temp dir), shuffle derived from input size") {
+    val mb = 1L << 20
+    assert(Harness.benchConf(4, 17 * mb) == deployment ++ Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.autoBroadcastJoinThreshold" -> "8MB",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.io.compression.codec" -> "lz4",
+      "spark.graft.spreadSmallScans" -> "true"))
+    assert(Harness.benchConf(32, 495 * mb)("spark.sql.shuffle.partitions") == "16")
   }
 }

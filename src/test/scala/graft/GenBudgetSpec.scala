@@ -51,7 +51,8 @@ class GenBudgetSpec extends AnyFunSuite {
     "dedup_ngram_jaccard" -> 3,
     // r15: the report's registered plan roots at the checkpointed flag
     // union (PlanShapeSpec pins the truncation); the screens' 15 Generates
-    // now run inside the builder's union plan, not the registered one.
+    // now run inside the builder's union plan, not the registered one;
+    // the flag-union test below caps them.
     "dedup_overlap_report" -> 0,
     "dedup_simhash" -> 1,
     "dedup_substring_rewrite" -> 4,
@@ -87,5 +88,20 @@ class GenBudgetSpec extends AnyFunSuite {
       s"duplicated-explode regression (a consumer stopped sharing its base " +
         s"subtree — see BENCH_NOTES §42/§53 and the seed/count-reference " +
         s"defenses):\n  ${over.mkString("\n  ")}")
+  }
+
+  /** The overlap report's seven screens plan inside the flag union its
+    * builder checkpoints, so the registered plan above shows none of
+    * their Generates (budget 0 above). This ceiling covers that union:
+    * the audited count at round 15 close. */
+  private val flagUnionBudget = 15
+
+  test("the overlap report's flag union plans no more Generates than its audited budget") {
+    val plan = graft.queries.DedupOverlap.flagUnion(staticSession, Sf001)
+      .queryExecution.executedPlan.toString()
+    val gens = "Generate".r.findAllIn(plan).size
+    assert(gens <= flagUnionBudget,
+      s"flag union: $gens Generates > budget $flagUnionBudget (a screen " +
+        "stopped sharing its corpus pass with the others)")
   }
 }

@@ -3,8 +3,10 @@
 # directly with java, bypassing sbt — so long-running mains don't hold the
 # sbt server lock and can run concurrently with `sbt test`.
 # Usage: tools/run.sh <mainClass> [args...]
-# Env: SPARK_DRIVER_MEM (default 48g), SPARK_GRAFT_JAVA_OPTS, SPARK_GRAFT_SF_DIR
+# Env: SPARK_DRIVER_MEM (default: half of MemTotal, clamped to [2g, 8g]),
+#      SPARK_GRAFT_JAVA_OPTS, SPARK_GRAFT_SF_DIR
 set -euo pipefail
+: "${SPARK_DRIVER_MEM:=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes
 [ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 1; }
@@ -19,7 +21,7 @@ MAIN="$1"; shift
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$SPARK_DRIVER_MEM" \
   -XX:ReservedCodeCacheSize=512m \
   ${SPARK_GRAFT_JAVA_OPTS:-} \
   -cp "$CLASSES:/opt/spark/jars/*" "$MAIN" "$@"
